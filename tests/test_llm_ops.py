@@ -1860,6 +1860,50 @@ def test_fixture_sig_dir_branch_sees_mtime(tmp_path):
     assert s1 != s2
 
 
+def _event_rows(user_ids):
+    """One click event per user id, a minute apart."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    return [
+        (i, t0 + dt.timedelta(minutes=i), u, "click", 1.0)
+        for i, u in enumerate(user_ids)
+    ]
+
+
+def test_stream_copy_sees_part_mtime_change(spark, tmp_path):
+    """A fixture dir regenerated in place with the same part names and
+    sizes must miss the stream-copy cache, not replay the stale copy."""
+    import glob
+    import os
+
+    from twitter_hashtag_sentiment_analysis_spark.streaming.queries import (
+        _stream_copy,
+    )
+
+    sf = _write_events(spark, tmp_path, _event_rows([1, 2, 3]))
+    first, _ = _stream_copy(spark, sf, "events")
+    part = sorted(glob.glob(str(tmp_path / "events.parquet" / "part-*")))[0]
+    st = os.stat(part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    second, _ = _stream_copy(spark, sf, "events")
+    assert second != first
+
+
+def test_sentinel_stream_rejects_reserved_user_id(spark, tmp_path):
+    """user_id -1 belongs to the watermark sentinel; an events fixture
+    that already holds it must fail loudly, naming the table."""
+    import pytest
+
+    from twitter_hashtag_sentiment_analysis_spark.streaming.queries import (
+        _events_stream_with_sentinel,
+    )
+
+    sf = _write_events(spark, tmp_path, _event_rows([1, -1, 2]))
+    with pytest.raises(ValueError, match="events"):
+        _events_stream_with_sentinel(spark, sf)
+
+
 def test_shuffle_override_restores_nests_and_survives_errors(spark):
     """session.shuffle_partitions_override must restore the prior value
     on clean exit, on exception, and under same-thread nesting (the
@@ -2547,7 +2591,7 @@ def test_mann_whitney_counts_form_equals_row_rank_form(spark, sf_dir, monkeypatc
 
     rows = {}
     for mode, gate in (("rowrank", 1 << 60), ("counts", 0)):
-        monkeypatch.setattr(agg, "SUBTREE_CKPT_MIN_BYTES", gate)
+        monkeypatch.setattr(agg, "MANN_WHITNEY_COUNTS_MIN_BYTES", gate)
         rows[mode] = sorted(
             map(tuple, agg.stat_mann_whitney(spark, sf_dir).collect())
         )

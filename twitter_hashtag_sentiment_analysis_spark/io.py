@@ -115,21 +115,10 @@ def fixture_sig(sf_dir: str, name: str) -> str:
         return "missing"
 
 
-#: Input-bytes floor above which a reused subtree is worth an eager
-#: localCheckpoint (r15, guide §5): the checkpoint costs one scheduling
-#: round-trip + a materialization (~0.1-1 s fixed), so it only pays once
-#: re-running the shared subtree costs multiples of that — i.e. once the
-#: subtree's SOURCE is at least tens of MB. Below the floor the natural
-#: lazy plan (duplicate subtrees and all) is faster.
-SUBTREE_CKPT_MIN_BYTES = 64 * 1024 * 1024
-
-
 def fixture_bytes(sf_dir: str, name: str) -> int:
     """Total on-disk bytes of one fixture parquet (file or dir) — a
-    no-job input-size probe for scale-gated plan decisions (the
-    ``spread()`` discipline applied to lineage truncation): operators
-    checkpoint a multiply-consumed subtree only when the input is big
-    enough that recomputing it dominates the checkpoint's fixed cost."""
+    no-job input-size probe for a scale-gated plan choice
+    (stat_mann_whitney's counts form, see operators/aggregates.py)."""
     src = os.path.join(sf_dir, f"{name}.parquet")
     try:
         st = os.stat(src)
@@ -138,8 +127,7 @@ def fixture_bytes(sf_dir: str, name: str) -> int:
         # os.walk, not a flat listdir: a nested layout (e.g. a
         # hive-partitioned fixture) must contribute its file bytes,
         # not ~4 KB of directory inodes — under-counting here leaves
-        # the SUBTREE_CKPT_MIN_BYTES gate off at real scale (r15
-        # advisor finding).
+        # a size gate off at real scale (r15 advisor finding).
         total = 0
         for root, _dirs, files in os.walk(src):
             for n in files:

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import SUBTREE_CKPT_MIN_BYTES, fixture_bytes, table
+from ..io import fixture_bytes, table
 from ..registry import register
 
 
@@ -1756,6 +1756,13 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Orders-fixture bytes above which stat_mann_whitney switches from the
+#: row-rank form to the per-value counts form. Measured crossover (r16,
+#: min-of-runs): sf0.1 (2.7 MB) row-rank 0.68 s vs counts 1.34 s; x100
+#: row-rank 6.76 s vs counts 4.76 s.
+MANN_WHITNEY_COUNTS_MIN_BYTES = 64 * 1024 * 1024
+
+
 @register(
     "stat_mann_whitney",
     sql="""
@@ -1834,7 +1841,7 @@ def stat_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("grp"),
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
     )
-    if fixture_bytes(sf_dir, "orders") > SUBTREE_CKPT_MIN_BYTES:
+    if fixture_bytes(sf_dir, "orders") > MANN_WHITNEY_COUNTS_MIN_BYTES:
         cnt = pool.groupBy("cents").agg(
             F.count("*").cast("long").alias("c"),
             F.sum(F.when(F.col("grp") == 1, 1).otherwise(0))

@@ -74,16 +74,35 @@ _MH_MOD = 1 << 40
 #: 256 buckets, so an uncapped degenerate band is quadratic.
 SIMHASH_BUCKET_CAP = 64
 
-#: PUBLIC shared threshold: run the exact-duplicate pre-collapse only
-#: when copies inflate the relation by >= 25% — below that the
-#: collapse's bookkeeping (slim group aggregate, id-map,
-#: representative join) costs more than the duplicate work it removes,
-#: and the direct chain is equally exact.  Every adaptive operator in
-#: the pairwise family (dedup_minhash here, sim_ann_lsh in
-#: operators/similarity.py, text_paragraph_dedup in
-#: operators/text_analysis.py) branches on this ONE constant so the
-#: collapse policy cannot drift per-operator.
-COLLAPSE_MIN_RATIO = 1.25
+def dup_heavy(df: DataFrame, col: str) -> bool:
+    """Exact-duplicate routing probe shared by the pairwise family
+    (dedup_minhash, text_paragraph_dedup, mm_phash_neardup, sim_ann_lsh
+    and sim_ann_lsh_multiprobe): True when copies of ``col`` inflate
+    ``df`` by >= 25%, i.e. when the exact-duplicate pre-collapse pays.
+    Below that ratio the collapse's bookkeeping (slim group aggregate,
+    id-map, representative join) costs more than the duplicate work it
+    removes, and the direct chain is equally exact.
+
+    One plan-time job on the caller's RAW scan (before ``spread()``,
+    whose repartition would shuffle the full payload just to count
+    it): single-pass HLL over xxhash64 (default rsd 5%, tails larger).
+    A hash collision undercounts distinct values, which only picks the
+    collapsed branch. Both branches are copy-level exact, so sketch
+    error never changes results, only which exact branch runs
+    (measured: an exact-distinct probe was 1.8 s at x25, HLL 0.3 s).
+    Near the threshold that choice costs speed: the direct chain can
+    run with up to ~1.25x duplication, where bucket occupancy and the
+    below-cap pair budget grow quadratically in the copy count.
+
+    At warehouse scale the answer is usually already in the catalog (an
+    ANALYZE'd NDV or a lakehouse sketch on a content digest); a
+    deployment with those statistics should branch on them instead."""
+    min_ratio = 1.25
+    n, n_distinct = df.agg(
+        F.count("*"), F.approx_count_distinct(F.xxhash64(col))
+    ).first()
+    return n >= min_ratio * n_distinct
+
 
 _MINHASH_SQL = f"""
         WITH tok AS (
@@ -247,29 +266,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_common = F.size(F.array_intersect("ts_a", "ts_b"))
     jac = n_common / (F.size("ts_a") + F.size("ts_b") - n_common)
 
-    # Cheap dup-ratio probe: xxhash64 instead of sha2 — a collision
-    # UNDERcounts n_distinct, which only overestimates the ratio and
-    # harmlessly picks the (exact) collapsed path. Both branches are
-    # exact: the direct chain IS the copy-level semantics (its bucket
-    # counts and pair expansion see every copy); the collapse merely
-    # removes redundant work when duplication is heavy enough to pay
-    # for its bookkeeping (COLLAPSE_MIN_RATIO). At warehouse scale the
-    # probe's answer is usually already IN the catalog — a deployment
-    # with ANALYZE'd tables (or a lakehouse NDV sketch on a content
-    # digest column) should branch on those statistics instead of
-    # paying this one extra scan; the probe is the fixture-friendly
-    # fallback, and the wrong branch is never wrong, only slower.
-    # Single-pass HLL instead of exact distinct: the branch decision
-    # tolerates the sketch error in either direction (both branches
-    # are exact; a misestimate only trades a little speed), and the
-    # sketch drops the probe's distinct-exchange — one scan, tiny
-    # state. approx_count_distinct's default rsd is 5% (tail
-    # deviations larger) — ample headroom against the 25%
-    # COLLAPSE_MIN_RATIO threshold either way.
-    n_docs, n_distinct = d.agg(
-        F.count("*"), F.approx_count_distinct(F.xxhash64("text"))
-    ).first()
-    if n_docs < COLLAPSE_MIN_RATIO * n_distinct:
+    if not dup_heavy(d, "text"):
         # (near-)duplicate-free corpus: run the direct copy-level chain
         # with none of the bookkeeping
         th = tok_hashes(d, ["doc_id"])

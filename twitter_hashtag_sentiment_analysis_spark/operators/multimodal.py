@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 
 from ..io import spread, table
 from ..registry import register
+from .dedup import dup_heavy
 
 N_HIST_BINS = 16
 
@@ -475,22 +476,7 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(*keep, "bd.band_idx", "bd.band_val")
 
     ham = F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))).cast("long")
-    # Routing probe on the RAW scan with single-pass HLL (the
-    # dedup_minhash / sim_ann_lsh / text_paragraph_dedup probe shape,
-    # r16): the old exact count_distinct(sha2(text)) ran a full sha2
-    # pass + exact-distinct shuffle THROUGH spread()'s payload
-    # repartition, at plan time, just to pick a branch. BOTH branches
-    # are copy-level exact (the direct chain is the definitional
-    # semantics; the collapsed chain is equivalence-proven above), so
-    # sketch error only ever flips WHICH exact branch runs — the same
-    # tolerance argument as the other three probes, sharing their
-    # COLLAPSE_MIN_RATIO constant.
-    from .dedup import COLLAPSE_MIN_RATIO
-
-    n_docs, n_distinct = raw.agg(
-        F.count("*"), F.approx_count_distinct(F.xxhash64("text"))
-    ).first()
-    if n_docs < COLLAPSE_MIN_RATIO * n_distinct:
+    if not dup_heavy(raw, "text"):
         # (near-)duplicate-free corpus: the collapse buys nothing — run
         # the direct copy-level chain with none of the bookkeeping
         hashed = with_ph(d, ["doc_id"])

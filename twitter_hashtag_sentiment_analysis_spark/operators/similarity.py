@@ -27,7 +27,7 @@ from ..io import spread, table
 from ..registry import register
 from ..session import shuffle_partitions_override
 from .cc_kernel import STAR_CC_MAX_ITERS, star_contraction_labels
-from .dedup import COLLAPSE_MIN_RATIO
+from .dedup import dup_heavy
 
 DIM = 64  # FIXTURES.md: 64-dimensional embeddings
 
@@ -596,18 +596,7 @@ def _lsh_topk5(
             F.col("bv").bitwiseXOR(F.col("m")).alias("p_band_val"),
         )
 
-    # Cheap dup-ratio probe: xxhash64 of the array instead of a raw
-    # array distinct (measured ~5x cheaper) — a collision UNDERcounts
-    # n_distinct, overestimating the ratio, which harmlessly picks the
-    # (exact) collapsed path. Both branches are exact; the collapse
-    # only pays off when duplication is heavy (dedup.COLLAPSE_MIN_RATIO
-    # rationale).
-    # ...and single-pass HLL for the same reason as dedup_minhash's
-    # probe: the sketch error only ever flips WHICH exact branch runs.
-    n_rows, n_distinct = e.agg(
-        F.count("*"), F.approx_count_distinct(F.xxhash64("embedding"))
-    ).first()
-    if n_rows < COLLAPSE_MIN_RATIO * n_distinct:
+    if not dup_heavy(e, "embedding"):
         # (near-)duplicate-free corpus: run the direct copy-level chain
         # with none of the bookkeeping
         # norms hoisted to once-per-row before banding (r15): the pair

@@ -13,9 +13,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import SUBTREE_CKPT_MIN_BYTES, fixture_bytes, spread, table
+from ..io import spread, table
 from ..registry import register
-from .dedup import COLLAPSE_MIN_RATIO
+from .dedup import dup_heavy
 
 # tiny per-language stopword sets over the fixture vocabulary; the
 # determinism (not linguistic accuracy) is the contract
@@ -645,10 +645,6 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT source, token, tf, lift, CAST(rk AS BIGINT) AS rk
         FROM ranked WHERE rk <= 5
     """,
-    # r15: the (source, token) count relation is localCheckpointed at
-    # plan time above the input-size floor (see fn body), so fn() may
-    # perform a plan-time job.
-    eager=True,
 )
 def text_source_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinctive terms per SOURCE by lift — the corpus-audit twin of
@@ -660,29 +656,20 @@ def text_source_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums, and the lift divides the two identically-associated doubles
     in both engines before one round(6).
 
-    Scale shape: ONE data-sized shuffle (the explode -> (source, token)
-    pre-aggregate, map-side combined). Everything downstream is
+    Scale shape: the data-sized work is the explode -> (source, token)
+    pre-aggregate, map-side combined. Everything downstream is
     vocabulary-sized: per-source totals and corpus term counts
     broadcast back onto the counts relation, and the top-5 window runs
-    WindowGroupLimit over vocab-sized groups. At 100 TB the corpus
-    pass dominates; the report stage is constant."""
+    WindowGroupLimit over vocab-sized groups. The lazy plan re-runs
+    that pre-aggregate once per consumer (4 document scans); a
+    checkpoint of it measured slower at sf0.1 (+0.25 s) and no clear
+    win at x100 (SCALING.md, r16 adjudication 2)."""
     d = table(spark, sf_dir, "documents")
-    # r15 (guide §1.2(1)/§5): src feeds FOUR branches (per-source
-    # totals, corpus term counts, the grand total, and the scored join)
-    # and each re-ran the corpus explode+aggregate — 4 document scans
-    # in the before-plan. The relation is |sources| x |vocab|-bounded,
-    # so a checkpoint makes the docstring's "ONE data-sized shuffle"
-    # literally true in the executed plan — but only above the input
-    # floor: at fixture scale the re-explodes are cheaper than the
-    # checkpoint's scheduling round-trip (A/B: +0.25 s at sf0.1), while
-    # at corpus scale they are three extra full passes.
     src = (
         d.select("source", F.explode(F.split("text", " ")).alias("token"))
         .groupBy("source", "token")
         .agg(F.count("*").alias("tf"))
     )
-    if fixture_bytes(sf_dir, "documents") > SUBTREE_CKPT_MIN_BYTES:
-        src = src.localCheckpoint(eager=True)
     stot = src.groupBy("source").agg(F.sum("tf").alias("s_total"))
     corpus = src.groupBy("token").agg(F.sum("tf").alias("ctf"))
     ctot = src.agg(F.sum("tf").alias("c_total"))
@@ -1638,10 +1625,6 @@ def quality_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY pmi_lift DESC, w1, w2
         LIMIT 50
     """,
-    # r15: the vocabulary-sized unigram/bigram count relations are
-    # localCheckpointed at plan time above the input-size floor (see fn
-    # body), so fn() may perform plan-time jobs.
-    eager=True,
 )
 def text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top bigram collocations by pointwise mutual information — the
@@ -1658,27 +1641,20 @@ def text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab^2-bounded relation (the same vocab-top-K bound text_zipf
     documents), with (w1, w2) as the deterministic tie-break. A
     min-count floor of 5 is applied BEFORE ranking so rare-pair noise
-    (the classic PMI failure mode) never reaches the shortlist."""
+    (the classic PMI failure mode) never reaches the shortlist. The
+    lazy plan recomputes the unigram counts for each of their three
+    consumers and the bigram counts for each of their two (5 document
+    scans); checkpointing both measured slower at sf0.1 (+0.25 s) and
+    no clear win at x100 (SCALING.md, r16 adjudication 2)."""
     toks = table(spark, sf_dir, "documents").select(
         F.split("text", " ").alias("ts")
     )
-    # r15 (guide §1.2(1)/§5): uni feeds THREE branches (u1, u2, the
-    # total) and bi feeds two — before, every branch re-ran the corpus
-    # tokenize+explode+aggregate (10 scans in the plan). Both relations
-    # are vocabulary-sized (uni: |V|; bi: distinct bigrams), so a
-    # checkpoint each leaves exactly two corpus passes — but only above
-    # the input floor: at fixture scale the re-explodes are cheaper
-    # than two checkpoint scheduling round-trips (A/B: +0.25 s at
-    # sf0.1), while at corpus scale they are three extra full passes.
-    ckpt_counts = fixture_bytes(sf_dir, "documents") > SUBTREE_CKPT_MIN_BYTES
     uni = (
         toks.select(F.explode("ts").alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("tok")
         .agg(F.count("*").cast("long").alias("c_tok"))
     )
-    if ckpt_counts:
-        uni = uni.localCheckpoint(eager=True)
     bigrams = F.expr(
         "IF(size(ts) >= 2, "
         "transform(sequence(1, size(ts) - 1), "
@@ -1692,8 +1668,6 @@ def text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w1", "w2")
         .agg(F.count("*").cast("long").alias("c_pair"))
     )
-    if ckpt_counts:
-        bi = bi.localCheckpoint(eager=True)
     tot = uni.agg(F.sum("c_tok").cast("long").alias("t_uni")).crossJoin(
         bi.agg(F.sum("c_pair").cast("long").alias("t_bi"))
     )
@@ -2085,20 +2059,7 @@ def text_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dedup_text"),
         )
 
-    # Cheap dup-ratio probe (the shared COLLAPSE_MIN_RATIO contract —
-    # see operators/dedup.py). Two probe-cost choices matter at scale:
-    # it runs on the RAW scan (spread()'s repartition would shuffle the
-    # full text payload just to count it), and it uses single-pass HLL
-    # approx_count_distinct (default rsd 5%, tail deviations larger —
-    # still far inside the 25% COLLAPSE_MIN_RATIO margin) — the branch
-    # decision tolerates the sketch error either way because BOTH
-    # branches are exact;
-    # a misestimate only trades a little speed (measured: exact-distinct
-    # probe 1.8 s at x25, HLL probe 0.3 s).
-    n_docs, n_distinct = raw.agg(
-        F.count("*"), F.approx_count_distinct(F.xxhash64("text"))
-    ).first()
-    if n_docs < COLLAPSE_MIN_RATIO * n_distinct:
+    if not dup_heavy(raw, "text"):
         return chunk_dedup(spread(raw))
 
     # --- collapsed path: the only corpus-wide work is the slim

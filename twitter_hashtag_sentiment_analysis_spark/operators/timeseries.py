@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import SUBTREE_CKPT_MIN_BYTES, epoch_us, fixture_bytes, table
+from ..io import epoch_us, table
 from ..registry import REGISTRY, register
 
 #: Session gap: a pause longer than this starts a new session (micros).
@@ -248,10 +248,6 @@ def ts_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
                      4) AS conv_from_first
         FROM counts
     """,
-    # r15: the per-stage user-grain relations are localCheckpointed at
-    # plan time above the input-size floor (see fn body), so fn() may
-    # perform plan-time jobs.
-    eager=True,
 )
 def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-step funnel (signup -> click -> purchase): a user counts
@@ -262,7 +258,10 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain of min-aggregates joined on user_id: every stage shuffles on
     the SAME key, so Catalyst reuses one partitioning end-to-end and
     each step's state is one timestamp per user. Output: per-step user
-    counts + conversion vs step 1 (1-row broadcast divisor)."""
+    counts + conversion vs step 1 (1-row broadcast divisor). The lazy
+    plan re-runs s1 and s2 for each of their consumers (7 event scans);
+    checkpointing both was a wash at x100 (SCALING.md, r16
+    adjudication 2)."""
     ev = table(spark, sf_dir, "events")
 
     def first_after(prev: DataFrame, etype: str, tcol: str, out: str) -> DataFrame:
@@ -274,27 +273,12 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min("ts").alias(out))
         )
 
-    # r15 (guide §1.2(1)/§5): each stage relation feeds TWO consumers
-    # (the next stage's join and its own count branch), and the count
-    # union re-ran the whole upstream chain per branch — the
-    # before-plan scanned events 7x. s1/s2 are (user_id, ts) pairs —
-    # one row per surviving user, the funnel's own state — so a
-    # checkpoint each leaves exactly one event scan per step (3 total).
-    # Identical arithmetic; checkpointing never changes values. Gated
-    # on the input floor: at fixture scale the re-scans and the two
-    # checkpoint round-trips measured a wash, so the natural lazy plan
-    # stays; at corpus scale the four saved event passes dominate.
-    ckpt_stages = fixture_bytes(sf_dir, "events") > SUBTREE_CKPT_MIN_BYTES
     s1 = (
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
     )
-    if ckpt_stages:
-        s1 = s1.localCheckpoint(eager=True)
     s2 = first_after(s1.select("user_id", "t1"), "click", "t1", "t2")
-    if ckpt_stages:
-        s2 = s2.localCheckpoint(eager=True)
     s3 = first_after(s2, "purchase", "t2", "t3")
     counts = (
         s1.agg(F.count("*").alias("n_users")).select(

@@ -45,14 +45,12 @@ class Query:
     #: (r13 self-review finding).  Not flagged: universal footer
     #: reads, and durable_fixture_dir build closures (first call per
     #: fixture generation only, cached across processes — see the
-    #: auditor docstring).  bench.py's timed region deliberately
-    #: includes the fn call, so eager work is always measured.
-    #: SIZE-GATED CASE (r15): an operator whose plan-time action sits
-    #: behind an input-size gate (SUBTREE_CKPT_MIN_BYTES in io.py —
-    #: event_funnel, text_source_terms, text_collocation_pmi) is still
-    #: declared eager=True; the declaration means "MAY run plan-time
-    #: jobs depending on input scale", conservatively treated as eager
-    #: by harnesses.
+    #: auditor docstring), and MLlib estimator fits (``.fit()`` runs
+    #: jobs at plan time, but the auditor does not track it — so
+    #: ml_sentiment_mllib and ml_kmeans_embeddings are declared lazy
+    #: although calling them trains a model).  bench.py's timed region
+    #: deliberately includes the fn call, so eager work is always
+    #: measured.
     eager: bool = False
     #: IN-PROCESS-MEMO CONTRACT.  A ``memo_backed`` key's fn consults a
     #: per-(session, fixture-signature) memo (the kNN-edge / CC-label

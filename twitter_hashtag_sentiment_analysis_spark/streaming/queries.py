@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.sentiment import sentiment_sql_cte
-from ..io import durable_fixture_dir, register_dir_cache, table
+from ..io import durable_fixture_dir, fixture_sig, register_dir_cache, table
 from ..registry import register
 from ..session import await_drain, shuffle_partitions_override
 from .pipeline import transform
@@ -78,21 +78,6 @@ def _run_to_memory(sdf, name_prefix: str, output_mode: str = "append") -> str:
 _stream_dir_cache: dict[tuple[str, str, str], str] = register_dir_cache({})
 
 
-def _fixture_sig(sf_dir: str, name: str) -> str:
-    """Size+mtime signature of one fixture parquet (file or dir)."""
-    src = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(src)
-        if not os.path.isdir(src):
-            return f"{st.st_size}:{st.st_mtime_ns}"
-        names = sorted(os.listdir(src))
-        return ",".join(
-            f"{n}:{os.stat(os.path.join(src, n)).st_size}" for n in names
-        )
-    except OSError:
-        return "missing"
-
-
 def _watermarkable(df: DataFrame) -> DataFrame:
     """Convert TIMESTAMP_NTZ columns to TIMESTAMP (LTZ, session pinned
     UTC so the wall clock is unchanged). Structured Streaming's
@@ -110,7 +95,7 @@ def _stream_copy(spark: SparkSession, sf_dir: str, name: str) -> tuple[str, Data
     """Materialize a batch table once as a stream-source directory;
     return (dir, batch_df) — the batch df carries the schema."""
     df = _watermarkable(table(spark, sf_dir, name))
-    key = (sf_dir, _fixture_sig(sf_dir, name), name)
+    key = (sf_dir, fixture_sig(sf_dir, name), name)
     path = _stream_dir_cache.get(key)
     if path is None:
         path = os.path.join(tempfile.mkdtemp(prefix=f"thsa_{name}stream_"), name)
@@ -588,7 +573,7 @@ def _multibatch_stream(
     count). Results are replay-count-invariant by construction, so the
     trim cannot move an oracle hash."""
     df = _watermarkable(table(spark, sf_dir, name))
-    key = (sf_dir, _fixture_sig(sf_dir, name), name, n_files)
+    key = (sf_dir, fixture_sig(sf_dir, name), name, n_files)
     path = _multibatch_dir_cache.get(key)
     if path is None:
         path = os.path.join(
@@ -892,7 +877,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle is the plain projection. At 100 TB the state store holds
     only the keys seen within the watermark horizon, not the corpus."""
     _, ev = _stream_copy(spark, sf_dir, "events")
-    key = (sf_dir, _fixture_sig(sf_dir, "events"), "events_twice")
+    key = (sf_dir, fixture_sig(sf_dir, "events"), "events_twice")
     fpath = _stream_dir_cache.get(key)
     cols = ("event_id", "ts", "user_id", "event_type", "value", "props")
     if fpath is None:
@@ -1225,9 +1210,16 @@ def _events_stream_with_sentinel(spark: SparkSession, sf_dir: str):
     short of the tail. The standard production analog is the periodic
     heartbeat record a Kafka producer emits for exactly this reason."""
     df = _watermarkable(table(spark, sf_dir, "events"))
-    key = (sf_dir, _fixture_sig(sf_dir, "events"), "events_sentinel")
+    key = (sf_dir, fixture_sig(sf_dir, "events"), "events_sentinel")
     path = _sentinel_dir_cache.get(key)
     if path is None:
+        # user_id -1 is reserved for the sentinel: the timeout-session
+        # handler skips that key's rows, so a real -1 would vanish.
+        if df.filter(F.col("user_id") == -1).first() is not None:
+            raise ValueError(
+                f"events fixture in {sf_dir} has user_id -1, the id "
+                "reserved for the watermark sentinel"
+            )
         path = os.path.join(tempfile.mkdtemp(prefix="thsa_sentinel_"), "ev")
         sentinel = df.orderBy(F.desc("ts")).limit(1).select(
             F.lit(-1).cast("long").alias("event_id"),
