@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from twitter_hashtag_sentiment_analysis_spark.io import table
@@ -2070,7 +2071,7 @@ def test_await_drain_times_out_and_stops_hung_query(spark, tmp_path):
     lock: a never-terminating rate-source query raises TimeoutError and
     is stopped (r11 advisor: unbounded awaitTermination under the
     process-wide RLock serialized every other override user forever)."""
-    import pytest
+    import re
 
     from twitter_hashtag_sentiment_analysis_spark.session import await_drain
 
@@ -2082,9 +2083,30 @@ def test_await_drain_times_out_and_stops_hung_query(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ck"))
         .start()
     )
-    with pytest.raises(TimeoutError):
+    with pytest.raises(TimeoutError) as err:
         await_drain(q, timeout_sec=2)
     assert not q.isActive
+    # the failure is attributable: it names the query and the seconds
+    # it actually waited
+    msg = str(err.value)
+    assert str(q.id) in msg
+    waited = float(re.search(r"waited (\d+\.\d)s", msg).group(1))
+    assert 1.5 <= waited < 60
+
+
+def test_memory_sink_drain_deadline_raises_instead_of_partial_result(
+    spark, monkeypatch
+):
+    """A polled memory-sink drain that misses its deadline must fail in
+    its own operator, naming the query and the rows it saw against the
+    cap, not aggregate whatever arrived."""
+    from twitter_hashtag_sentiment_analysis_spark.sources import pydatasource
+
+    monkeypatch.setattr(pydatasource, "MEMORY_SINK_TIMEOUT_SEC", 0)
+    with pytest.raises(TimeoutError, match=r"pystream_out_\d+ held 0 of \d+ rows"):
+        pydatasource.stream_python_source(spark, "")
+    active = [q.name or "" for q in spark.streams.active]
+    assert not any(n.startswith("pystream_out_") for n in active)
 
 
 def test_state_probe_attributes_events_by_runid():
@@ -2201,6 +2223,77 @@ def test_paragraph_dedup_collapse_matches_copy_level_reference(spark, tmp_path):
     assert len(reps_with_keep) < len(texts) / 5
     all_kept_text = " | ".join(t for _, _, t in want.values())
     assert all_kept_text.count("nav0") == 1
+
+
+def _duplicated_corpus() -> list[tuple[int, str]]:
+    """~20 distinct texts, several repeated 2-5 times under scattered,
+    non-monotone doc_ids, plus one empty text. Texts share words,
+    trigrams and 5-grams with each other, so every pair, shingle and
+    n-gram statistic sees both intra-group and cross-group overlap."""
+    import random
+
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    words = base.split(" ")
+    texts = [base]
+    for i in range(1, 8):  # one-word edits: high shingle overlap
+        w = list(words)
+        w[i] = f"edit{i}"
+        texts.append(" ".join(w))
+    for i in range(6):  # shared 5-gram prefix, distinct tails
+        texts.append(f"boiler plate header for page {i} tail{i} alpha beta gamma")
+    texts += ["short one", "two words", "solo", "x y z", "a b c d e f g h", ""]
+    copies = [1, 3, 1, 2, 1, 5, 1, 1, 4, 1, 1, 2, 1, 1, 3, 1, 1, 2, 1, 2]
+    rows = [t for t, c in zip(texts, copies) for _ in range(c)]
+    ids = random.Random(7).sample(range(100, 100 + 13 * len(rows), 13), len(rows))
+    return list(zip(ids, rows))
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "text_bpe_tokens",
+        "text_lm_doc_nll",
+        "dedup_substring_corpus",
+        "dedup_ngram_jaccard",
+        "dedup_connected_components",
+    ],
+)
+def test_always_collapsed_keys_match_oracle_on_duplicated_corpus(
+    spark, tmp_path, key
+):
+    """Keys that always run the exact-duplicate collapse (no routing
+    probe) must hash-match their registered DuckDB oracle on a corpus
+    where copies exist: the sf fixtures are duplicate-free, so there
+    the collapse is the identity and the expansion goes unexercised."""
+    import importlib.util
+    import os
+
+    import duckdb
+
+    spec = importlib.util.spec_from_file_location(
+        "check_oracle",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "check_oracle.py"),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    rows = _duplicated_corpus()
+    assert len({t for _, t in rows}) == 20 and len(rows) > 30
+    sf = _write_docs(spark, tmp_path, rows)
+    q = load_all()[key]
+    sdf = q.fn(spark, sf)
+    got = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet/*.parquet')"
+    )
+    res = con.sql(q.sql)
+    dcols = [d[0] for d in res.description]
+    want = res.fetchall()
+    assert sorted(sdf.columns) == sorted(dcols)
+    assert len(got) == len(want)
+    assert mod.table_hash(sdf.columns, got) == mod.table_hash(dcols, want)
 
 
 def test_release_retired_memos_frees_last_generation(spark):

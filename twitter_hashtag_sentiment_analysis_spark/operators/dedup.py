@@ -26,6 +26,7 @@ from ..io import spread, table
 from ..registry import register
 from ..session import default_parallelism, shuffle_partitions_override
 from .cc_kernel import star_contraction_labels
+from .collapse import content_groups, content_key, dup_heavy, expand_group_pairs
 
 
 @register(
@@ -73,35 +74,6 @@ _MH_MOD = 1 << 40
 #: Same cap for the SimHash band self-join: 8-bit band values have only
 #: 256 buckets, so an uncapped degenerate band is quadratic.
 SIMHASH_BUCKET_CAP = 64
-
-def dup_heavy(df: DataFrame, col: str) -> bool:
-    """Exact-duplicate routing probe shared by the pairwise family
-    (dedup_minhash, text_paragraph_dedup, mm_phash_neardup, sim_ann_lsh
-    and sim_ann_lsh_multiprobe): True when copies of ``col`` inflate
-    ``df`` by >= 25%, i.e. when the exact-duplicate pre-collapse pays.
-    Below that ratio the collapse's bookkeeping (slim group aggregate,
-    id-map, representative join) costs more than the duplicate work it
-    removes, and the direct chain is equally exact.
-
-    One plan-time job on the caller's RAW scan (before ``spread()``,
-    whose repartition would shuffle the full payload just to count
-    it): single-pass HLL over xxhash64 (default rsd 5%, tails larger).
-    A hash collision undercounts distinct values, which only picks the
-    collapsed branch. Both branches are copy-level exact, so sketch
-    error never changes results, only which exact branch runs
-    (measured: an exact-distinct probe was 1.8 s at x25, HLL 0.3 s).
-    Near the threshold that choice costs speed: the direct chain can
-    run with up to ~1.25x duplication, where bucket occupancy and the
-    below-cap pair budget grow quadratically in the copy count.
-
-    At warehouse scale the answer is usually already in the catalog (an
-    ANALYZE'd NDV or a lakehouse sketch on a content digest); a
-    deployment with those statistics should branch on them instead."""
-    min_ratio = 1.25
-    n, n_distinct = df.agg(
-        F.count("*"), F.approx_count_distinct(F.xxhash64(col))
-    ).first()
-    return n >= min_ratio * n_distinct
 
 
 _MINHASH_SQL = f"""
@@ -187,29 +159,13 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     halves back to two xxhash64 seeds recovers it with no other plan
     change — the hash is one narrow projection.
 
-    EXACT-DUPLICATE PRE-COLLAPSE (the mm_phash_neardup discipline,
-    ported here after the x25 replication stress showed this key at
-    2.5x wall for 25x data): every stage — token set, signature, band
-    keys, exact Jaccard — is a pure function of `text`, so
-    byte-identical copies inflate the token explode, the signature
-    aggregate, AND every below-cap bucket's pair budget quadratically.
-    On a corpus with duplicates the whole chain therefore runs on ONE
-    representative per distinct text (group key sha2(text); gid = min
-    member doc_id), and copy-level pairs are reconstructed exactly:
-      (a) bucket keep/drop uses the COPY count sum(m) per bucket —
-          identical to the uncollapsed [2, CAP] filter, because copies
-          land in exactly the same buckets;
-      (b) two docs are candidates iff their GROUPS share a kept
-          bucket, and the Jaccard verify is a function of the two
-          token SETS — group-level;
-      (c) co-copies share every band and verify at Jaccard 1, so they
-          pair iff ANY of their group's buckets is kept and m >= 2,
-          always at distance 0.0;
-      (d) a group with m > CAP copies overflows every bucket it
-          touches on its own, so every group the id expansion reads
-          has m <= CAP — the per-group id lists are CAP-bounded by
-          construction (viral duplicates self-exclude), never a
-          corpus-sized collect_list.
+    EXACT-DUPLICATE PRE-COLLAPSE (operators/collapse.py): every stage —
+    token set, signature, band keys, exact Jaccard — is a pure function
+    of `text`, so on a duplicate-heavy corpus (``dup_heavy``) the chain
+    runs on one representative per distinct text, buckets keep or drop
+    on the copy count sum(m), and ``expand_group_pairs`` rebuilds the
+    copy pairs (co-copies at distance 0.0). The x25 replication stress
+    showed this key at 2.5x wall for 25x data before the collapse.
     Dup-free corpora (the sf fixtures) skip the bookkeeping entirely —
     one cheap count pair, then the direct copy-level chain; the
     duplicated regime is pinned by a planted copy-level-reference
@@ -304,32 +260,16 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_a", "doc_b", F.round(1.0 - jac, 4).alias("jaccard_dist"))
         )
 
-    # --- collapsed path: group by content hash; the only corpus-wide
-    # work is the slim (doc_id, gh) aggregate and one doc_id-hash join
-    # pulling each representative's text — tokenize/md5/signature run
-    # on n_distinct rows, not n_docs.
-    # One window pass over the slim (doc_id, gh) projection yields the
-    # group key, copy count, and the CAP-bounded sorted id list (by (d)
-    # above only m <= CAP groups are ever expanded, so the rn filter is
-    # a pure memory bound, never observable); a single localCheckpoint
-    # materializes it for its three consumers (reps join, intra, cross).
-    wg = Window.partitionBy("gh").orderBy("doc_id")
-    wga = Window.partitionBy("gh")
+    # --- collapsed path: the only corpus-wide work is the slim
+    # (doc_id, gh) group window and one doc_id-hash join pulling each
+    # representative's text — tokenize/md5/signature run on n_distinct
+    # rows, not n_docs. One localCheckpoint materializes the groups for
+    # their three consumers (reps join, intra, cross).
     grp = (
-        d.select("doc_id", F.sha2("text", 256).alias("gh"))
-        .withColumn("rn", F.row_number().over(wg))
-        .withColumn("m", F.count("*").over(wga))
-        .filter(F.col("rn") <= MINHASH_BUCKET_CAP + 1)
-        .groupBy("gh")
-        .agg(
-            F.min("doc_id").alias("gid"),
-            F.first("m").cast("long").alias("m"),
-            F.sort_array(F.collect_list("doc_id")).alias("ids"),
-        )
+        content_groups(d, "doc_id", "text", cap=MINHASH_BUCKET_CAP)
         .drop("gh")
         .localCheckpoint(eager=True)
     )
-    idmap = grp.select("gid", "ids")
     reps = d.join(
         grp.select(F.col("gid").alias("doc_id"), "m"), "doc_id"
     ).select(F.col("doc_id").alias("gid"), "text", "m")
@@ -348,21 +288,8 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("bn") >= 2) & (F.col("bn") <= MINHASH_BUCKET_CAP))
         .drop("bn")
     )
-    # intra-group pairs: a group with >= 2 copies in >= 1 kept bucket —
-    # all C(m, 2) copy pairs verify at Jaccard 1 => distance 0.0
-    intra = (
-        eligible.filter(F.col("m") >= 2)
-        .select("gid")
-        .distinct()
-        .join(idmap, "gid")
-        .select(F.explode("ids").alias("doc_a"), "ids")
-        .select("doc_a", F.explode("ids").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.lit(0.0).alias("jaccard_dist"))
-    )
-    # cross-group pairs: distinct group pairs sharing a kept bucket,
-    # Jaccard-verified ONCE per group pair; id lists join in only after
-    # the verify (the surviving pair set is the small relation)
+    # distinct group pairs sharing a kept bucket, Jaccard-verified ONCE
+    # per group pair
     a, b = eligible.alias("a"), eligible.alias("b")
     gpairs = (
         a.join(
@@ -382,24 +309,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(jac >= 0.7)
         .select("gid_a", "gid_b", F.round(1.0 - jac, 4).alias("jaccard_dist"))
     )
-    cross = (
-        verified.join(
-            idmap.select(F.col("gid").alias("gid_a"), F.col("ids").alias("ids_a")),
-            "gid_a",
-        )
-        .join(
-            idmap.select(F.col("gid").alias("gid_b"), F.col("ids").alias("ids_b")),
-            "gid_b",
-        )
-        .select("jaccard_dist", F.explode("ids_a").alias("i"), "ids_b")
-        .select("jaccard_dist", "i", F.explode("ids_b").alias("j"))
-        .select(
-            F.least("i", "j").alias("doc_a"),
-            F.greatest("i", "j").alias("doc_b"),
-            "jaccard_dist",
-        )
-    )
-    return intra.unionAll(cross).select("doc_a", "doc_b", "jaccard_dist")
+    return expand_group_pairs(grp, eligible, verified, "jaccard_dist")
 
 
 _SIMHASH_SQL = f"""
@@ -601,12 +511,10 @@ _NGRAM_PAIRS_CTES = f"""{_NGRAM_COMMON_CTES},
 def _shingle_relation(docs_w: DataFrame) -> DataFrame:
     """Surviving (doc_id, shingle) rows under the weighted DF cap.
 
-    ``docs_w`` — a (doc_id, text, w) relation to shingle; ``w`` weights
-    the document-frequency cap so a collapsed exact-dup group (one row
-    per distinct content, w = member count) still counts every member
-    toward DF, keeping the surviving-shingle set IDENTICAL to the
-    uncollapsed run.  (Both callers pass the sha2-collapsed content
-    relation; an uncollapsed run is the w≡1 special case.)"""
+    ``docs_w`` — a (doc_id, text, w) relation to shingle, one row per
+    distinct content (``_content_reps``); the DF cap sums the copy
+    count ``w``, so the surviving-shingle set is the uncollapsed run's
+    (operators/collapse.py, (a))."""
     d = docs_w.select("doc_id", "w", F.split("text", " ").alias("toks"))
     # split once into an array column; re-splitting inside the lambda
     # (element_at(split(text, ' '), i)) is O(tokens^2) per document
@@ -660,40 +568,41 @@ def _common_from(shingled: DataFrame) -> DataFrame:
     )
 
 
+def _content_reps(docs: DataFrame) -> DataFrame:
+    """(gh, doc_id, text, w): one representative per distinct text, in
+    the (doc_id, text, w) shape ``_shingle_relation`` shingles."""
+    return content_groups(docs, "doc_id", "text", carry=("text",)).select(
+        "gh", F.col("gid").alias("doc_id"), "text", F.col("m").alias("w")
+    )
+
+
 def _shingle_common(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-pair common-shingle counts with both docs' shingle-set sizes
     — the DataFrame twin of _NGRAM_COMMON_CTES. Columns: (doc_a, doc_b,
     n_common, n_sh_a, n_sh_b); both symmetric-Jaccard and asymmetric-
     containment scoring are one projection away.
 
-    Exact-dup pre-collapse (same move as `dedup_connected_components`,
-    extended to the PAIR-EMITTING family): the expensive stage — the
-    shingle inverted-index self-join — runs on one REPRESENTATIVE per
-    distinct content (sha2 groups, DF cap weighted by member count, so
-    the surviving-shingle set matches the uncollapsed run), and the
-    result re-expands to member pairs afterwards. Counts depend only
-    on content, so the expansion is exact: (a) every member pair
-    WITHIN a group that kept >=1 shingle shares its full shingle set
-    (n_common = n_sh on both sides); (b) every CROSS-group member pair
-    inherits its rep pair's counts, ordered by (least, greatest) id.
-    The output is still quadratic in cluster size — it lists the pairs
-    — but pair GENERATION cost drops from (copies x copies) joins to
-    (contents x contents), which is the difference that matters on a
-    30-50%-duplicate crawl."""
+    Exact-dup pre-collapse (operators/collapse.py): the shingle
+    inverted-index self-join runs on one representative per distinct
+    content (DF cap weighted by the copy count), and the result
+    re-expands to member pairs afterwards: every member pair WITHIN a
+    group that kept >=1 shingle shares its full shingle set (n_common =
+    n_sh on both sides); every CROSS-group member pair inherits its rep
+    pair's counts, ordered by (least, greatest) id, with the per-side
+    counts swapping along with the ids. The output is still quadratic
+    in cluster size — it lists the pairs — but pair GENERATION cost
+    drops from (copies x copies) joins to (contents x contents)."""
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    grp = d.groupBy(F.sha2("text", 256).alias("chash")).agg(
-        F.min("doc_id").alias("doc_id"),
-        F.first("text").alias("text"),
-        F.count("*").cast("long").alias("w"),
-    )
-    grp = grp.localCheckpoint(eager=True)  # reused: shingles + expansion
+    grp = _content_reps(d).localCheckpoint(
+        eager=True
+    )  # reused: shingles + expansion
     shingled = _shingle_relation(grp).localCheckpoint(
         eager=True
     )  # reused: pair gen + intra-group sizes
     rep_pairs = _common_from(shingled)
-    members = d.select("doc_id", F.sha2("text", 256).alias("chash"))
-    rep_of = grp.select("chash", F.col("doc_id").alias("rep"))
-    mem = members.join(rep_of, "chash").select("doc_id", "rep")
+    members = d.select("doc_id", content_key(d, "text").alias("gh"))
+    rep_of = grp.select("gh", F.col("doc_id").alias("rep"))
+    mem = members.join(rep_of, "gh").select("doc_id", "rep")
     # (a) intra-group pairs: groups with >=1 surviving shingle and >=2
     # members — all ordered member pairs, full-overlap counts
     sizes = shingled.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
@@ -888,22 +797,15 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash despite the iterative implementation. component_size counts
     reachable docs (oracle) == component membership (Spark groupBy).
 
-    Exact-dup pre-collapse (the 100 TB move — a real crawl is 30-50%
-    byte-identical): documents are first grouped by sha2(text) to one
-    REPRESENTATIVE row per distinct content (rep = min member doc_id,
-    w = member count), and shingling / pair-gen / label propagation all
-    run on the collapsed relation — the quadratic pair space shrinks
-    from docs sharing a shingle to CONTENTS sharing one.  Correctness
-    is preserved exactly: (a) the DF cap is weighted by w, so the
-    surviving-shingle set matches the uncollapsed run; (b) pair
-    existence and jaccard depend only on content; (c) members of a
-    group WITH >=1 surviving shingle are pairwise jaccard-1.0, so they
-    inherit their rep's component (keeper = min rep in rep-component =
-    min doc_id in the full component, since each rep is its group's
-    min); (d) members of a group with NO surviving shingles have no
-    edges at all and stay singletons — exactly the oracle's reach.
-    sha2-256 collisions are the only approximation (cryptographically
-    negligible)."""
+    Exact-dup pre-collapse (operators/collapse.py): shingling,
+    pair-gen and label propagation run on one representative per
+    distinct content (rep = min member doc_id, DF cap weighted by the
+    copy count w). Members of a group WITH >=1 surviving shingle are
+    pairwise jaccard-1.0, so they inherit their rep's component
+    (keeper = min rep in rep-component = min doc_id in the full
+    component, since each rep is its group's min); members of a group
+    with NO surviving shingles have no edges at all and stay
+    singletons — exactly the oracle's reach."""
     return _cc_labels(spark, sf_dir)
 
 
@@ -926,12 +828,7 @@ def _cc_labels_cold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One full CC-label build (shingle pairs -> star contraction ->
     re-expand), no memo read — the real construction cost."""
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    # one row per distinct content: rep id, the text, and member count
-    grp = docs.groupBy(F.sha2("text", 256).alias("chash")).agg(
-        F.min("doc_id").alias("doc_id"),
-        F.first("text").alias("text"),
-        F.count("*").cast("long").alias("w"),
-    )
+    grp = _content_reps(docs)
     # size EVERY shuffle here (shingle join + label propagation) to the
     # corpus: ~1 partition per 20k docs, floor 8, capped — parquet
     # metadata count, no data read
@@ -957,11 +854,11 @@ def _cc_labels_cold(spark: SparkSession, sf_dir: str) -> DataFrame:
         "has_sh", F.lit(True)
     )
     rep = (
-        grp.select("chash", "doc_id", "w")
+        grp.select("gh", "doc_id", "w")
         .join(labels, "doc_id")
         .join(has_sh, "doc_id", "left")
         .select(
-            "chash",
+            "gh",
             "comp",
             "w",
             F.coalesce("has_sh", F.lit(False)).alias("has_sh"),
@@ -974,8 +871,8 @@ def _cc_labels_cold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rep = rep.join(comp_sizes, "comp", "left")
     out = (
-        docs.select("doc_id", F.sha2("text", 256).alias("chash"))
-        .join(rep, "chash")
+        docs.select("doc_id", content_key(docs, "text").alias("gh"))
+        .join(rep, "gh")
         .select(
             "doc_id",
             F.when(F.col("has_sh"), F.col("comp"))
@@ -1184,11 +1081,9 @@ def dedup_substring_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-document Jaccard cut, which is exactly the dup class
     pairwise MinHash misses.
 
-    Plan (all equi-key, all linear): (1) exact-dup pre-collapse — the
-    same sha2(text) representative move as `dedup_ngram_jaccard` /
-    `dedup_connected_components` / `text_lm_doc_nll`; every stage below
-    runs once per distinct CONTENT, not once per copy, which is the
-    difference on a 30-50%-duplicate crawl — (2) ONE narrow explode of
+    Plan (all equi-key, all linear): (1) exact-dup pre-collapse
+    (operators/collapse.py) — every stage below runs once per distinct
+    CONTENT, not once per copy — (2) ONE narrow explode of
     the representatives' 5-gram positions, localCheckpointed so the
     expansion is computed once and reused by both consumers, (3) gram
     -> doc-frequency hash aggregate where each distinct (content, gram)
@@ -1205,15 +1100,12 @@ def dedup_substring_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction.  Fully SQL-expressible => exact oracle.  Pairwise
     twin: `dedup_ngram_jaccard`; whole-doc twin: `dedup_exact`."""
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    grp = d.groupBy(F.sha2("text", 256).alias("chash")).agg(
-        F.first("text").alias("text"),
-        F.count("*").cast("long").alias("w"),
-    )
+    grp = content_groups(d, "doc_id", "text", carry=("text",))
     toks = grp.select(
-        "chash", "w", F.split("text", " ").alias("ts")
+        "gh", F.col("m").alias("w"), F.split("text", " ").alias("ts")
     ).filter(F.size("ts") >= DUP_GRAM_N)
     grams = toks.select(
-        "chash",
+        "gh",
         "w",
         F.explode(
             F.transform(
@@ -1223,13 +1115,13 @@ def dedup_substring_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("gram"),
     ).localCheckpoint(eager=True)  # reused: DF aggregate + join-back
     gdf = (
-        grams.dropDuplicates(["chash", "gram"])
+        grams.dropDuplicates(["gh", "gram"])
         .groupBy("gram")
         .agg(F.sum("w").cast("long").alias("n_docs"))
     )
     per_grp = (
         grams.join(gdf, "gram")
-        .groupBy("chash")
+        .groupBy("gh")
         .agg(
             F.count("*").cast("long").alias("n_grams"),
             F.count_if(F.col("n_docs") >= DUP_GRAM_MIN_DOCS)
@@ -1237,9 +1129,9 @@ def dedup_substring_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("dup_grams"),
         )
     )
-    members = d.select("doc_id", F.sha2("text", 256).alias("chash"))
+    members = d.select("doc_id", content_key(d, "text").alias("gh"))
     frac = F.col("dup_grams") / F.col("n_grams")
-    return members.join(per_grp, "chash").select(
+    return members.join(per_grp, "gh").select(
         "doc_id",
         "n_grams",
         "dup_grams",

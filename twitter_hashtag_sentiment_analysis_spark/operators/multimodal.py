@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 
 from ..io import spread, table
 from ..registry import register
-from .dedup import dup_heavy
+from .collapse import content_groups, dup_heavy, expand_group_pairs
 
 N_HIST_BINS = 16
 
@@ -379,29 +379,13 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     are bounded by CAP x band rows, never all-pairs.  Fully
     SQL-expressible => exact oracle.
 
-    EXACT-DUPLICATE PRE-COLLAPSE (the r10 dedup/similarity discipline,
-    ported here after the x25 stress showed this key at 5.2x wall for
-    25x data): byte-identical blobs hash to identical ph and identical
-    band values, so replication inflates every bucket's occupancy by
-    the copy factor and the below-cap pair budget quadratically.  All
-    hashing, banding, and Hamming verification therefore run on ONE
-    representative per distinct blob (sha2 of the bytes); copy-level
-    pairs are reconstructed exactly afterwards.  Equivalence with the
-    copy-level plan, piece by piece:
-      (a) bucket keep/drop uses the COPY count (sum of group
-          multiplicities per bucket) — identical to the uncollapsed
-          [2, CAP] filter;
-      (b) two docs are candidates iff their GROUPS share a kept bucket
-          (band values are a function of the blob), and Hamming is a
-          function of (ph_a, ph_b) — group-level;
-      (c) co-copies share every band, so they are candidates iff ANY
-          of their group's buckets is kept, and always verify
-          (Hamming 0);
-      (d) a group with more copies than CAP overflows every bucket it
-          touches on its own, so any group whose ids the expansion
-          reads has <= CAP members — the per-group id list is
-          CAP-bounded by construction (viral duplicates self-exclude),
-          never a corpus-sized collect_list.
+    EXACT-DUPLICATE PRE-COLLAPSE (operators/collapse.py): byte-identical
+    blobs hash to identical ph and identical band values, so on a
+    duplicate-heavy corpus (``dup_heavy``) hashing, banding and Hamming
+    verification run on one representative per distinct blob, buckets
+    keep or drop on the copy count sum(m), and ``expand_group_pairs``
+    rebuilds the copy pairs (co-copies at Hamming 0). The x25 stress
+    showed this key at 5.2x wall for 25x data before the collapse.
     Dup-free corpora (the sf fixtures) skip the bookkeeping entirely —
     one cheap count pair, then the direct chain; the duplicated regime
     is pinned by a planted copy-level-reference test.
@@ -514,31 +498,18 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # group only during collapse, never rides a hot shuffle).  ph is
     # computed at COPY level (pure projection in the scan stage, no
     # shuffle) so the one corpus-wide shuffle — the group window —
-    # carries (doc_id, gh, ph), never text bytes.  The id list is
-    # truncated at CAP + 1 members purely as a memory bound — by (d)
-    # above any group the expansion actually reads has <= CAP members,
-    # so the truncation is never observable.
-    hcopy = with_ph(
-        d.select("doc_id", "text", F.sha2("text", 256).alias("gh")),
-        ["doc_id", "gh"],
-    )
-    wg = Window.partitionBy("gh").orderBy("doc_id")
-    wga = Window.partitionBy("gh")
+    # carries (doc_id, gh, ph), never text bytes.
     grp = (
-        hcopy.withColumn("rn", F.row_number().over(wg))
-        .withColumn("m", F.count("*").over(wga))
-        .filter(F.col("rn") <= MM_PHASH_BUCKET_CAP + 1)
-        .groupBy("gh")
-        .agg(
-            F.min("doc_id").alias("gid"),
-            F.first("ph").alias("ph"),
-            F.first("m").cast("long").alias("m"),
-            F.sort_array(F.collect_list("doc_id")).alias("ids"),
+        content_groups(
+            with_ph(d.select("doc_id", "text"), ["doc_id", "text"]),
+            "doc_id",
+            "text",
+            carry=("ph",),
+            cap=MM_PHASH_BUCKET_CAP,
         )
         .drop("gh")
         .localCheckpoint(eager=True)
     )
-    idmap = grp.select("gid", "ids")
     bands = band_explode(grp, ["gid", "ph", "m"])  # slim: longs only
     wb = Window.partitionBy("band_idx", "band_val")
     eligible = (
@@ -546,25 +517,10 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("bn") >= 2) & (F.col("bn") <= MM_PHASH_BUCKET_CAP))
         .drop("bn")
     )
-    # intra-group pairs: a group in >= 1 kept bucket with >= 2 copies —
-    # all C(m, 2) copy pairs verify at Hamming 0
-    intra = (
-        eligible.filter(F.col("m") >= 2)
-        .select("gid")
-        .distinct()
-        .join(idmap, "gid")
-        .select(F.explode("ids").alias("doc_a"), "ids")
-        .select("doc_a", F.explode("ids").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.lit(0).cast("long").alias("hamming"))
-    )
-    # cross-group pairs: distinct group pairs sharing a kept bucket,
-    # Hamming-verified once per group pair; id lists join in only
-    # AFTER the Hamming filter (the surviving pair set is the small
-    # relation), then expand to every (i in A, j in B) copy pair
-    # oriented (min, max)
+    # distinct group pairs sharing a kept bucket, Hamming-verified once
+    # per group pair
     a, b = eligible.alias("a"), eligible.alias("b")
-    gpairs = (
+    verified = (
         a.join(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
@@ -581,18 +537,7 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("hamming", ham)
         .filter(F.col("hamming") <= MM_PHASH_HAM_MAX)
     )
-    cross = (
-        gpairs.join(idmap.select(F.col("gid").alias("gid_a"), F.col("ids").alias("ids_a")), "gid_a")
-        .join(idmap.select(F.col("gid").alias("gid_b"), F.col("ids").alias("ids_b")), "gid_b")
-        .select("hamming", F.explode("ids_a").alias("i"), "ids_b")
-        .select("hamming", "i", F.explode("ids_b").alias("j"))
-        .select(
-            F.least("i", "j").alias("doc_a"),
-            F.greatest("i", "j").alias("doc_b"),
-            "hamming",
-        )
-    )
-    return intra.unionAll(cross).select("doc_a", "doc_b", "hamming")
+    return expand_group_pairs(grp, eligible, verified, "hamming")
 
 
 #: Shot-boundary rule: consecutive frames whose 16-bin byte-histogram

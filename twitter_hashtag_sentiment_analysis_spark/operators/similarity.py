@@ -27,7 +27,7 @@ from ..io import spread, table
 from ..registry import register
 from ..session import shuffle_partitions_override
 from .cc_kernel import STAR_CC_MAX_ITERS, star_contraction_labels
-from .dedup import dup_heavy
+from .collapse import content_groups, content_key, dup_heavy
 
 DIM = 64  # FIXTURES.md: 64-dimensional embeddings
 
@@ -204,33 +204,21 @@ def sim_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~log2 n bits) as n grows. Identical banding runs in the oracle, so
     the driver check is still exact-hash.
 
-    Replicated corpora take the exact-dup pre-collapse path (same
-    discipline and equivalence argument as _knn_mutual_edges, and
-    simpler — a pure threshold, no ranking): distinct-vector pairs are
-    banded/scored once, then expanded to copy pairs via two members
-    joins, plus the within-group C(m,2) pairs at the self-cosine for
-    every duplicated vector with >= 1 kept bucket. The pair OUTPUT is
-    inherently quadratic in the replication factor (every copy pair
-    is a row); the collapse makes the SCORING linear in distinct
-    pairs — at the r10 25x stress this cut 36.7 s to ~expansion-bound
-    time. Duplicate-free corpora (the sf fixtures) take the direct
-    path below unchanged."""
+    Duplicate-heavy corpora (``dup_heavy``) take the exact-dup
+    pre-collapse path (operators/collapse.py; a pure threshold, no
+    ranking): distinct-vector pairs are banded/scored once, then
+    expanded to copy pairs via two members joins, plus the within-group
+    C(m,2) pairs at the self-cosine for every duplicated vector with
+    >= 1 kept bucket. The pair OUTPUT is inherently quadratic in the
+    replication factor (every copy pair is a row); the collapse makes
+    the SCORING linear in distinct pairs — at the r10 25x stress this
+    cut 36.7 s to ~expansion-bound time. Other corpora (the sf
+    fixtures) take the direct path below unchanged."""
     e = table(spark, sf_dir, "embeddings")
-    gh_expr = F.sha2(F.to_json(F.col("embedding")), 256).alias("gh")
-    ec = e.select("vec_id", "embedding", gh_expr)
-    n_copies, n_distinct = ec.agg(
-        F.count("*"), F.count_distinct("gh")
-    ).first()
-    if n_distinct != n_copies:
-        grp = (
-            ec.groupBy("gh")
-            .agg(
-                F.min("vec_id").alias("gid"),
-                F.first("embedding").alias("embedding"),
-                F.count("*").cast("long").alias("m"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    if dup_heavy(e, "embedding"):
+        grp = content_groups(
+            e, "vec_id", "embedding", carry=("embedding",)
+        ).localCheckpoint(eager=True)
         scored, has_kept = _band_pair_score(
             grp.select("gid", "m", "embedding"), raw_col="raw", directed=False
         )
@@ -239,7 +227,7 @@ def sim_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("raw") >= 0.3)
             .select("src", "dst", "cos_sim")
         )
-        members = ec.select("gh", "vec_id")
+        members = e.select(content_key(e, "embedding").alias("gh"), "vec_id")
         gmap = grp.select("gid", "gh")
         cross = (
             dp.join(
@@ -524,24 +512,19 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract. At 100 TB the bucket join touches only colliding pairs
     instead of |probes| x |corpus|.
 
-    EXACT-DUPLICATE PRE-COLLAPSE (the mm_phash/dedup_minhash
-    discipline, ported after the x25 replication stress showed this
-    key at 3.2x wall for 25x data): signature, band values, and the
-    rounded cosine to any probe are pure functions of the embedding,
-    so byte-identical vectors multiply the signature projection, the
-    bucket join, the candidate distinct, and the rerank by the copy
-    factor. On a corpus with duplicates the chain runs on ONE
-    representative per distinct embedding and copy-level rows are
+    EXACT-DUPLICATE PRE-COLLAPSE (operators/collapse.py; the x25
+    replication stress showed this key at 3.2x wall for 25x data
+    before it): signature, band values, and the rounded cosine to any
+    probe are pure functions of the embedding, so on a duplicate-heavy
+    corpus the chain runs on ONE representative per distinct
+    embedding, scored once per (probe, group), and copy-level rows are
     reconstructed exactly before the final top-5 window:
-      (a) a copy collides with a probe iff its GROUP does (bands are a
-          function of the vector), and its rounded cosine equals the
-          group's — so scoring once per (probe, group) is exact;
-      (b) the per-group id list is truncated to the 6 SMALLEST vec_ids:
+      (a) the per-group id list is truncated to the 6 SMALLEST vec_ids:
           group members tie on cos_sim and break ties by vec_id asc,
           so at most 5 members of any group (6 minus a possible
           probe-self exclusion) can appear in a probe's top-5 — the
           7th-smallest id always has >= 5 group-mates ranked ahead;
-      (c) the probe itself is excluded AFTER expansion (vec_id !=
+      (b) the probe itself is excluded AFTER expansion (vec_id !=
           probe_id), matching the copy-level predicate — the probe's
           co-copies remain candidates at cosine 1.0, as in the direct
           chain.
@@ -643,29 +626,15 @@ def _lsh_topk5(
             F.col("rk") <= 5
         )
 
-    # --- collapsed path: one representative per distinct embedding
-    # (gid = min member vec_id), ids truncated to the 6 smallest per
-    # (b) above; the signature projection, bucket join, distinct, and
-    # cosine all run at group granularity. The group key is
-    # sha2(to_json(embedding)) — _knn_mutual_edges' discipline — NOT
-    # the raw array: windowing/grouping by the array sorts rows with
-    # interpreted 64-element comparisons (measured 5 s for 50k rows at
-    # x25), while the fixed-width string key stays in codegen.
-    ec = e.select(
-        "vec_id",
-        "embedding",
-        F.sha2(F.to_json(F.col("embedding")), 256).alias("gh"),
-    )
-    wg = Window.partitionBy("gh").orderBy("vec_id")
+    # --- collapsed path (operators/collapse.py): one representative
+    # per distinct embedding (gid = min member vec_id), ids truncated
+    # to the 6 smallest per (a) in sim_ann_lsh's docstring; the
+    # signature projection, bucket join, distinct, and cosine all run
+    # at group granularity. The copy count is never read, so it is
+    # dropped (and pruned) before the checkpoint.
     grp = (
-        ec.withColumn("rn", F.row_number().over(wg))
-        .filter(F.col("rn") <= 6)
-        .groupBy("gh")
-        .agg(
-            F.min("vec_id").alias("gid"),
-            F.first("embedding").alias("embedding"),
-            F.sort_array(F.collect_list("vec_id")).alias("ids"),
-        )
+        content_groups(e, "vec_id", "embedding", carry=("embedding",), cap=5)
+        .drop("m")
         .localCheckpoint(eager=True)
     )
     sig_g = grp.select(
@@ -682,8 +651,12 @@ def _lsh_topk5(
     # again would compile a second multi-thousand-node janino class
     # for the 16 literal-plane dots (the mm_phash JIT lesson)
     probe_sig = (
-        ec.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pe"), "gh")
+        e.filter(F.col("vec_id") < 20)
+        .select(
+            F.col("vec_id").alias("probe_id"),
+            F.col("embedding").alias("pe"),
+            content_key(e, "embedding").alias("gh"),
+        )
         .join(sig_g.select("gh", "sig"), "gh")
         .select("probe_id", "pe", _norm(F.col("pe")).alias("pnrm"), "sig")
     )
@@ -3059,19 +3032,14 @@ _knn_mutual_cache: dict = {}
 def _knn_mutual_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build (or fetch) the mutual-kNN edge relation.
 
-    EXACT-DUPLICATE PRE-COLLAPSE (the 100 TB move, mirroring
-    dedup_connected_components' sha2(text) discipline on the embedding
-    side): a real crawl's embedding store is heavily replicated —
-    byte-identical vectors under different ids — and every band bucket
-    then inflates its occupancy by the replication factor, making the
-    below-cap pair budget QUADRATIC in replication (the r10 25x stress
-    measured this key at 45x wall for 25x data: 25 copies of each
-    vector -> 625x pairs per bucket). All banding, candidate
-    generation, and cosine scoring therefore run on ONE representative
-    per distinct vector; per-copy top-k is then reconstructed exactly
-    (see _expand_topk inline) because copies share identical band
-    values AND identical cosines to every candidate. Equivalence
-    argument, per copy c of vector v ranked by (cos DESC, dst ASC):
+    EXACT-DUPLICATE PRE-COLLAPSE (operators/collapse.py; the r10 25x
+    stress measured this key at 45x wall for 25x data before it): all
+    banding, candidate generation, and cosine scoring run on ONE
+    representative per distinct vector; per-copy top-k is then
+    reconstructed exactly in _knn_mutual_edges_build because copies
+    share identical band values AND identical cosines to every
+    candidate. The top-k steps, per copy c of vector v ranked by
+    (cos DESC, dst ASC):
       (a) a candidate vector u contributes at most K copies to c's
           top-K, and those must be u's K smallest copy ids (any other
           copy of u loses the dst tie-break to them);
@@ -3082,9 +3050,7 @@ def _knn_mutual_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
       (c) co-copies of v (cos = the self-cosine of v, computed with
           the SAME float arrays both engines see) are candidates
           exactly when v sits in >= 1 kept bucket, and only v's K+1
-          smallest copy ids can appear in any copy's top-K;
-      (d) bucket keep/drop uses the COPY count (sum of multiplicities
-          per bucket), identical to the uncollapsed filter.
+          smallest copy ids can appear in any copy's top-K.
     For a duplicate-free corpus the collapse is the identity and the
     chain degenerates to the r9 shape — which is what the sf fixtures
     (all-distinct embeddings) and the unchanged copy-level oracle
@@ -3110,8 +3076,7 @@ def _knn_mutual_edges_cold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One full mutual-kNN graph build, no memo read or write."""
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
-    gh = F.sha2(F.to_json(F.col("embedding")), 256).alias("gh")
-    ec = e.select("vec_id", "embedding", gh)
+    ec = e.select("vec_id", "embedding", content_key(e, "embedding").alias("gh"))
     n_copies, n_distinct = ec.agg(
         F.count("*"), F.count_distinct("gh")
     ).first()
@@ -3144,26 +3109,12 @@ def _knn_mutual_edges_cold(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             edges = _mutual(topk)
         else:
-            # --- exact-dup collapse: one representative per distinct
-            # vector. Copy-id bookkeeping stays BOUNDED: a window
-            # keeps only the K+1 smallest ids per group (all any
-            # top-K can ever cite), so no collect_list ever sees a
-            # viral-duplicate group's full id list.
-            wg = Window.partitionBy("gh").orderBy("vec_id")
-            wga = Window.partitionBy("gh")
-            grp = (
-                ec.withColumn("rn", F.row_number().over(wg))
-                .withColumn("m", F.count("*").over(wga))
-                .filter(F.col("rn") <= KNN_GRAPH_K + 1)
-                .groupBy("gh")
-                .agg(
-                    F.min("vec_id").alias("gid"),
-                    F.first("embedding").alias("embedding"),
-                    F.first("m").cast("long").alias("m"),
-                    F.sort_array(F.collect_list("vec_id")).alias("ids"),
-                )
-                .localCheckpoint(eager=True)
-            )
+            # --- exact-dup collapse (operators/collapse.py): one
+            # representative per distinct vector, keeping only the
+            # K+1 smallest ids per group (all any top-K can ever cite)
+            grp = content_groups(
+                e, "vec_id", "embedding", carry=("embedding",), cap=KNN_GRAPH_K
+            ).localCheckpoint(eager=True)
             edges = _knn_mutual_edges_build(spark, ec, grp)
     return edges
 

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..io import spread, table
 from ..registry import register
-from .dedup import dup_heavy
+from .collapse import content_groups, content_key, dup_heavy
 
 # tiny per-language stopword sets over the fixture vocabulary; the
 # determinism (not linguistic accuracy) is the contract
@@ -988,18 +988,16 @@ def text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     the counts project in a first SELECT and `chars_per_token` derives
     from the aliased columns (CollapseProject keeps non-cheap
     higher-order expressions single-evaluated rather than re-inlining
-    them); (2) the same exact-dup pre-collapse as `text_lm_doc_nll` /
-    `dedup_ngram_jaccard` — counts depend only on content, so the
-    replace chain runs once per sha2(text) representative and re-joins
-    to member doc_ids.  The collapse trades the pure map's zero
-    shuffle for a partial-agg-collapsed chash shuffle + 1:1 join-back;
-    on a 30-50%-duplicate crawl that removes the majority of the
-    tokenizer arithmetic, and on a dup-free corpus the overhead is the
-    same modest constant the shingle family documents."""
+    them); (2) the exact-dup pre-collapse (operators/collapse.py) —
+    counts depend only on content, so the replace chain runs once per
+    distinct text and re-joins to member doc_ids.  The collapse trades
+    the pure map's zero shuffle for a partial-agg-collapsed content-key
+    shuffle + 1:1 join-back; on a 30-50%-duplicate crawl that removes
+    the majority of the tokenizer arithmetic, and on a dup-free corpus
+    the overhead is the same modest constant the shingle family
+    documents."""
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    grp = d.groupBy(F.sha2("text", 256).alias("chash")).agg(
-        F.first("text").alias("text")
-    )
+    grp = content_groups(d, "doc_id", "text", carry=("text",))
     ts = F.split("text", " ")
 
     def bpe_count(w: Column) -> Column:
@@ -1014,13 +1012,13 @@ def text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_chars = F.aggregate(ts, F.lit(0), lambda acc, w: acc + F.length(w))
     n_bpe = F.aggregate(ts, F.lit(0), lambda acc, w: acc + bpe_count(w))
     per = grp.select(
-        "chash",
+        "gh",
         F.size(ts).cast("long").alias("n_words"),
         n_chars.cast("long").alias("n_chars_sum"),
         n_bpe.cast("long").alias("n_bpe"),
     )
-    members = d.select("doc_id", F.sha2("text", 256).alias("chash"))
-    return members.join(per, "chash").select(
+    members = d.select("doc_id", content_key(d, "text").alias("gh"))
+    return members.join(per, "gh").select(
         "doc_id",
         "n_words",
         "n_chars_sum",
@@ -1262,23 +1260,23 @@ def text_lm_doc_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     must be finite for the score to rank gibberish below prose.
 
     Scale shape: documents first collapse to one REPRESENTATIVE row
-    per distinct content (sha2 group, w = member count — identical
-    contents score identically, and a real crawl is 30-50% exact
-    dups), then one explode of the collapsed relation yields per-rep
-    distinct bigram counts; the model tables (bigram, unigram, vocab
-    scalar) aggregate those counts WEIGHTED BY w, so corpus statistics
-    count every copy exactly as the uncollapsed run would. Scores
+    per distinct content (operators/collapse.py; w = member count —
+    identical contents score identically), then one explode of the
+    collapsed relation yields per-rep distinct bigram counts; the model
+    tables (bigram, unigram, vocab scalar) aggregate those counts
+    WEIGHTED BY w, so corpus statistics count every copy exactly as the
+    uncollapsed run would. Scores
     compute once per content and re-expand to members by a hash join.
     The NLL sum is occurrence-weighted over distinct bigrams (bounded
     terms per doc), rounded to 4 dp once, and the fluency flag
     compares the rounded score on both engines."""
     d = table(spark, sf_dir, "documents").filter(F.col("text") != "")
-    grp = d.groupBy(F.sha2("text", 256).alias("chash")).agg(
-        F.min("doc_id").alias("rep_id"),
-        F.first("text").alias("text"),
-        F.count("*").cast("long").alias("w"),
+    grp = content_groups(d, "doc_id", "text", carry=("text",))
+    toks = grp.select(
+        F.col("gid").alias("rep_id"),
+        F.col("m").alias("w"),
+        F.split("text", " ").alias("ts"),
     )
-    toks = grp.select("rep_id", "w", F.split("text", " ").alias("ts"))
     bigram_expr = F.expr(
         "IF(size(ts) >= 2, "
         "transform(sequence(1, size(ts) - 1), "
@@ -1320,8 +1318,8 @@ def text_lm_doc_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("v")
     )
     # re-expand the per-content score to every member document
-    members = d.select("doc_id", F.sha2("text", 256).alias("chash")).join(
-        grp.select("chash", "rep_id"), "chash"
+    members = d.select("doc_id", content_key(d, "text").alias("gh")).join(
+        grp.select("gh", F.col("gid").alias("rep_id")), "gh"
     )
     return members.join(per_rep, "rep_id").select(
         "doc_id", "n_bigrams", "nll", "is_fluent"
@@ -1984,18 +1982,14 @@ def text_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding. The window's per-chunk ordering (doc_id, chunk_idx) is a
     total order, so keeper choice is deterministic on both engines.
 
-    EXACT-DUPLICATE PRE-COLLAPSE (the dedup_minhash discipline, ported
-    here after the x25 replication stress showed this key as the
-    family's worst wall ratio, 2.52x for 25x data): the chunk stream
-    is a pure function of `text`, so byte-identical copies inflate the
-    explode AND the first-occurrence window quadratically in the copy
-    factor while contributing NOTHING to the output but zeros —
-    because a non-representative copy d of text T can never keep a
-    chunk: its group's representative rep(d) = min(doc_id) carries the
-    identical chunk at the identical chunk_idx, and
+    EXACT-DUPLICATE PRE-COLLAPSE (operators/collapse.py; the x25
+    replication stress showed this key at 2.52x wall for 25x data
+    before it): a non-representative copy d of text T can never keep a
+    chunk, because its group's representative rep(d) = min(doc_id)
+    carries the identical chunk at the identical chunk_idx, and
     (rep(d), idx) < (d, idx) in the window's total order. Hence on a
-    duplicated corpus the chunk window runs over ONE representative
-    per distinct text and the expansion is exact:
+    duplicate-heavy corpus the chunk window runs over ONE
+    representative per distinct text and the expansion is exact:
       (a) the global keeper of any chunk c is always attained AT a
           representative (any non-rep occurrence (d, i) is dominated
           by its rep's (rep(d), i)), so the rep-only window computes
@@ -2069,8 +2063,8 @@ def text_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeding the chunk window is spread(): the slim projection's
     # groupBy supplies its own exchange, and repartitioning the full
     # duplicated text payload would be pure shuffle waste.
-    slim = raw.select("doc_id", F.sha2("text", 256).alias("gh"))
-    groups = slim.groupBy("gh").agg(F.min("doc_id").alias("gid"))
+    slim = raw.select("doc_id", content_key(raw, "text").alias("gh"))
+    groups = content_groups(raw, "doc_id", "text").select("gh", "gid")
     reps = spread(
         raw.join(groups.select(F.col("gid").alias("doc_id")), "doc_id")
     )

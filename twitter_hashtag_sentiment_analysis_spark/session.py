@@ -14,6 +14,7 @@ import contextlib
 import os
 import tempfile
 import threading
+import time
 
 from pyspark.sql import SparkSession
 
@@ -50,16 +51,20 @@ DRAIN_TIMEOUT_SEC = 600
 
 
 def await_drain(q, timeout_sec: int = DRAIN_TIMEOUT_SEC) -> None:
-    """Bounded awaitTermination for drains running under
-    ``shuffle_partitions_override``: raises TimeoutError (after stopping
-    the query) instead of holding the override lock indefinitely."""
+    """Bounded awaitTermination for streaming drains: raises TimeoutError
+    (after stopping the query) instead of returning a partial result or
+    holding the ``shuffle_partitions_override`` lock indefinitely. The
+    message names the query and the seconds this process waited, so a
+    hang is attributable to its operator."""
+    t0 = time.monotonic()
     if not q.awaitTermination(timeout_sec):
+        waited = time.monotonic() - t0
         try:
             q.stop()
         finally:
             raise TimeoutError(
-                f"streaming drain exceeded {timeout_sec}s while holding the "
-                "shuffle-partitions override lock"
+                f"streaming query {q.name or q.id} did not finish: "
+                f"waited {waited:.1f}s (limit {timeout_sec}s); query stopped"
             )
 
 

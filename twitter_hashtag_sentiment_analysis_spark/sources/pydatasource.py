@@ -31,13 +31,14 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import register_dir_cache, table
 from ..registry import register
-from ..session import shuffle_partitions_override
+from ..session import await_drain, shuffle_partitions_override
 
 #: Deterministic generator constants — mirrored literally in the oracle
 #: SQL below and embedded by value into the pickled reader class.
@@ -49,6 +50,32 @@ PYDS_VOCAB = (
 )
 PYDS_ROWS = 2000
 PYDS_PARTITIONS = 4
+
+#: How long (seconds) a polled memory-sink drain may take to reach its
+#: row cap before it fails.
+MEMORY_SINK_TIMEOUT_SEC = 120
+
+
+def _await_memory_rows(spark: SparkSession, q, name: str, cap: int) -> None:
+    """Poll memory sink ``name`` until it holds ``cap`` rows, then stop
+    ``q``. Raises TimeoutError (after stopping the query) when
+    MEMORY_SINK_TIMEOUT_SEC passes first, instead of letting the caller
+    aggregate a partial drain."""
+    deadline = time.time() + MEMORY_SINK_TIMEOUT_SEC
+    got = 0
+    while time.time() < deadline:
+        got = spark.sql(f"SELECT count(*) AS n FROM {name}").collect()[0]["n"]
+        if got == cap:
+            break
+        time.sleep(0.1)
+    q.stop()
+    q.awaitTermination(30)
+    if got != cap:
+        raise TimeoutError(
+            f"streaming query {name} held {got} of {cap} rows after "
+            f"{MEMORY_SINK_TIMEOUT_SEC}s"
+        )
+
 
 _registered = False
 
@@ -177,8 +204,6 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     query runs a real processing-time trigger polled until the cap is
     reached — the reference's 60 s buffer loop
     (stream_processor.py:295-297) scaled down."""
-    import time
-
     from pyspark.sql.datasource import (
         DataSource,
         SimpleDataSourceStreamReader,
@@ -261,14 +286,7 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(processingTime="0 seconds")
             .start()
         )
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            got = spark.sql(f"SELECT count(*) AS n FROM {name}").collect()[0]["n"]
-            if got == cap:
-                break
-            time.sleep(0.1)
-        q.stop()
-        q.awaitTermination(30)
+        _await_memory_rows(spark, q, name, cap)
     # the drained micro-batches are now data at rest; the aggregate is
     # a plain batch plan over them (stateful streaming aggregation is
     # covered by stream_update_mode/stream_tumbling — keeping the
@@ -374,8 +392,6 @@ def stream_python_source_reshard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_quality_ops.py. Output: per-shard record counts and id
     ranges, exact-hash-verified against the closed-form SQL shard
     assignment."""
-    import time
-
     from pyspark.sql.datasource import (
         DataSource,
         SimpleDataSourceStreamReader,
@@ -472,14 +488,7 @@ def stream_python_source_reshard(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(processingTime="0 seconds")
             .start()
         )
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            got = spark.sql(f"SELECT count(*) AS n FROM {name}").collect()[0]["n"]
-            if got == cap:
-                break
-            time.sleep(0.1)
-        q.stop()
-        q.awaitTermination(30)
+        _await_memory_rows(spark, q, name, cap)
     return (
         spark.table(name)
         .groupBy("shard_id")
@@ -738,7 +747,7 @@ def sink_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    await_drain(q)
 
     # read back THROUGH the manifests: only committed parts count
     committed: list[str] = []

@@ -1622,7 +1622,7 @@ def stream_incremental_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_drain(q)
         n_runs += 1
     return (
         spark.read.parquet(sink)
